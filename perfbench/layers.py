@@ -223,6 +223,50 @@ def engine_cpu(jvm_pid: int) -> tuple[float, float]:
     return total, py
 
 
+class ProgramCpu:
+    """CPU seconds the program has used so far, read from ``/proc``.
+
+    The program is the engine (see ``engine_cpu``) plus this process's
+    own threads, which run the driver side (DataFrame creation, result
+    collection, the IQ service). Two kinds of time are left out, since
+    neither is work the program does for its input:
+
+    - time the hypervisor gives to other guests (steal), which the
+      kernel charges to no process, so a busy host does not inflate it;
+    - the JVM's JIT compiler threads. A fresh JVM compiles for minutes,
+      longer than a run, and that time lands in whichever step or read
+      happens to run beside it. A compiler thread that exits keeps the
+      time last read for it.
+    """
+
+    _JIT = ("C1 CompilerThre", "C2 CompilerThre")
+
+    def __init__(self, jvm_pid: int) -> None:
+        self.jvm_pid = jvm_pid
+        self._jit: dict[str, int] = {}  # compiler tid -> ticks last read
+
+    def _jit_s(self) -> float:
+        base = f"/proc/{self.jvm_pid}/task"
+        for tid in os.listdir(base):
+            try:
+                with open(f"{base}/{tid}/comm") as f:
+                    if not f.read().startswith(self._JIT):
+                        continue
+                with open(f"{base}/{tid}/stat") as f:
+                    fields = f.read().rsplit(")", 1)[1].split()
+            except OSError:
+                continue
+            self._jit[tid] = int(fields[11]) + int(fields[12])
+        return sum(self._jit.values()) / _CLK_TCK
+
+    def now(self) -> float:
+        jit = self._jit_s()
+        engine = engine_cpu(self.jvm_pid)[0]
+        with open("/proc/self/stat") as f:  # last: the scans above are ours
+            own = sum(int(x) for x in f.read().rsplit(")", 1)[1].split()[11:13])
+        return engine - jit + own / _CLK_TCK
+
+
 def host_steal_pct(since: list[int] | None = None) -> tuple[list[int], float]:
     """The share of the host's CPU time the hypervisor gave to other
     guests since ``since`` (a previous return value's first element)."""
